@@ -1,0 +1,2 @@
+"""Repo benchmark: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` (see ``run.py``)."""
