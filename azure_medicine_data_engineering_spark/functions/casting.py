@@ -31,10 +31,6 @@ def comma_decimal(c: Column) -> Column:
     return F.regexp_replace(c.cast("string"), ",", ".")
 
 
-def to_double_comma(c: Column) -> Column:
-    return comma_decimal(c).cast("double")
-
-
 def to_date(c: Column) -> Column:
     return F.to_date(c)
 

@@ -175,42 +175,6 @@ def random_search_tree(
     return tvs.fit(train), configs
 
 
-def grid_search_tree(
-    train: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    max_depths: list[int] = (3, 5, 7),
-    seed: int = 42,
-):
-    """TrainValidationSplit over a small grid (M7 — grid, not Bayesian; the
-    reference used 50 Bayesian hyperdrive runs)."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.classification import DecisionTreeClassifier
-    from pyspark.ml.evaluation import BinaryClassificationEvaluator
-    from pyspark.ml.feature import Imputer, MinMaxScaler, VectorAssembler
-    from pyspark.ml.tuning import ParamGridBuilder, TrainValidationSplit
-
-    imputed = [f"{c}__imp" for c in feature_cols]
-    dt = DecisionTreeClassifier(labelCol=label_col, featuresCol="features", seed=seed)
-    pipe = Pipeline(
-        stages=[
-            Imputer(strategy="mean", inputCols=feature_cols, outputCols=imputed),
-            VectorAssembler(inputCols=imputed, outputCol="features_raw"),
-            MinMaxScaler(inputCol="features_raw", outputCol="features"),
-            dt,
-        ]
-    )
-    grid = ParamGridBuilder().addGrid(dt.maxDepth, list(max_depths)).build()
-    tvs = TrainValidationSplit(
-        estimator=pipe,
-        estimatorParamMaps=grid,
-        evaluator=BinaryClassificationEvaluator(labelCol=label_col),
-        trainRatio=0.75,
-        seed=seed,
-    )
-    return tvs.fit(train)
-
-
 def hashed_token_features(
     df: DataFrame,
     text_col: str = "text",

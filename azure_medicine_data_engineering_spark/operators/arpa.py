@@ -258,17 +258,16 @@ def _write_section(
                 fh = open(tmp, "w", encoding="utf-8")
             # vectorized line assembly (optimization round 16, guide
             # §4.2): pandas str.cat instead of a per-row Python loop;
-            # astype(str) on int64 stats equals str(int) byte-for-byte
+            # astype(str) on int64 stats equals str(int) byte-for-byte.
+            # The int64 cast comes first so a NULL stat (float64 NaN after
+            # Arrow) raises instead of landing as "nan" or "1.0".
             words = pdf[keys[0]].astype(str)
             if len(keys) > 1:
                 words = words.str.cat(
                     [pdf[k].astype(str) for k in keys[1:]], sep=" "
                 )
-            vals = pdf[stats[0]].astype(str)
-            if len(stats) > 1:
-                vals = vals.str.cat(
-                    [pdf[s].astype(str) for s in stats[1:]], sep=" "
-                )
+            ints = [pdf[s].astype("int64").astype(str) for s in stats]
+            vals = ints[0].str.cat(ints[1:], sep=" ") if len(ints) > 1 else ints[0]
             lines = words.str.cat(vals, sep="\t")
             if len(lines):
                 fh.write("\n".join(lines.tolist()))

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
+
 DELIM = chr(31)  # unit separator: outside the GPT-2 mapped-symbol image
 
 
@@ -163,7 +165,8 @@ def _merge_loop(words: DataFrame, n_merges: int) -> DataFrame:
             ).alias("s"),
             "f",
         )
-    return spark.createDataFrame(
+    return from_rows(
+        spark,
         merges,
         "merge_idx int, left_sym string, right_sym string, pair_count long",
     )

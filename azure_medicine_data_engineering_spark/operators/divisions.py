@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
+
 DIVISION_SCHEMA = StructType(
     [
         StructField("divisionName", StringType()),
@@ -26,7 +28,7 @@ def division_table(
     spark: SparkSession, divisions: list[tuple[str, list[str]]]
 ) -> DataFrame:
     """Build a division metadata frame from (name, columns) pairs."""
-    return spark.createDataFrame(divisions, DIVISION_SCHEMA)
+    return from_rows(spark, divisions, DIVISION_SCHEMA)
 
 
 def get_columns_of_divisions_df(div: DataFrame, names: list[str]) -> DataFrame:

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
+
 DESC_NULLS = "number of null values"
 DESC_RANGE = "outside of the range"
 DESC_OUTLIER = "oultlier number"  # sic — reference spelling
@@ -92,7 +94,7 @@ def quality_report(
         aggs.append(F.avg(col).alias(f"__mean__{c}"))
         aggs.append(F.stddev_pop(col).alias(f"__std__{c}"))
     if not aggs:
-        return spark.createDataFrame([], REPORT_SCHEMA)
+        return from_rows(spark, [], REPORT_SCHEMA)
 
     moments = df.agg(*aggs)
     if cache:
@@ -229,7 +231,7 @@ def referential_integrity_report(
             keys, child[r.child_fk] == keys["__pk"], "left_anti"
         ).count()
         records.append(("orphaned foreign keys", r.name, int(orphans)))
-    return spark.createDataFrame(records, REPORT_SCHEMA)
+    return from_rows(spark, records, REPORT_SCHEMA)
 
 
 def mad_outlier_report(

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
+
 
 def _bucket(key: Column, buckets: int = 10_000) -> Column:
     """Stable bucket in [0, buckets): md5-derived, engine-reproducible
@@ -113,7 +115,8 @@ def quota_sample(
         raise ValueError(f"quota_sample: targets must be > 0, got {bad}")
 
     spark = df.sparkSession
-    tgt = spark.createDataFrame(
+    tgt = from_rows(
+        spark,
         [(k, float(v)) for k, v in targets.items()],
         f"{strata_col} string, _target double",
     )

@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
+
 INDEX_HEADER = "index.json"
 
 _WRITE_SCHEMA = StructType(
@@ -208,7 +210,8 @@ def sq8_index_rescore(
     )
 
     spark = df.sparkSession
-    ranges_df = spark.createDataFrame(
+    ranges_df = from_rows(
+        spark,
         [(d, lo, hi) for d, (lo, hi) in enumerate(ranges_rt)],
         "dim int, lo double, hi double",
     )

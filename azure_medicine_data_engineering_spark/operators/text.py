@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
+
 #: Marker stopwords per language for the n-gram/stopword language heuristic.
 #: Deliberately tiny: the mechanism (per-language marker hit counts + fixed
 #: priority argmax) is the operator; swap in real lists for production.
@@ -418,7 +420,8 @@ def bpe_merge_train(
             ).alias("s"),
             "f",
         )
-    out = spark.createDataFrame(
+    out = from_rows(
+        spark,
         merges,
         "merge_idx int, left_sym string, right_sym string, pair_count long",
     )
@@ -503,8 +506,8 @@ def _bpe_merge_train_batched(
             )
         cur = cur.select(col.alias("s"), "f").localCheckpoint(eager=True)
         round_secs.append(_time.monotonic() - t0)
-    out = spark.createDataFrame(
-        merges, "merge_idx int, left_sym string, right_sym string, pair_count long"
+    out = from_rows(
+        spark, merges, "merge_idx int, left_sym string, right_sym string, pair_count long"
     )
     out._round_secs = round_secs
     out._stage_caches = [cur]
@@ -682,7 +685,8 @@ def bpe_merge_train_by_group(
         cur = cur.where(
             F.col("g").isin([r["g"] for r in top])
         ).select("g", rewrite.alias("s"), "f")
-    out = spark.createDataFrame(
+    out = from_rows(
+        spark,
         merges,
         "g string, merge_idx int, left_sym string, right_sym string,"
         " pair_count long",

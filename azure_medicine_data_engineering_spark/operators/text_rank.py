@@ -192,8 +192,8 @@ def unigram_logprob_scores(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
     )
     if cache:
-        # vocab build + per-doc scoring share it; caller-owned lifecycle
-        # (cache=False) for long-lived sessions
+        # vocab build + per-doc scoring share it; released through the
+        # output's _stage_caches, or caller-owned (cache=False)
         tok = tok.persist()
     vocab = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
@@ -208,7 +208,7 @@ def unigram_logprob_scores(
     # Spark's and DuckDB's decimal rounding disagree; (-slpu) div n is exact
     # and order-free, and dividing the micro-grid integer by 1e6 afterwards
     # is an identity-round on both engines
-    return (
+    out = (
         tok.join(lpu, "tok")
         .groupBy(id_col)
         .agg(
@@ -223,6 +223,8 @@ def unigram_logprob_scores(
             ).alias("mean_neg_logprob"),
         )
     )
+    out._stage_caches = [tok] if cache else []
+    return out
 
 
 def bigram_logprob_scores(
@@ -262,7 +264,8 @@ def bigram_logprob_scores(
         F.col(id_col), F.explode(word_ngrams(toks, 2)).alias("bg")
     )
     if cache:
-        # model build + scoring share it; caller-owned lifecycle
+        # model build + scoring share it; released through the output's
+        # _stage_caches, or caller-owned (cache=False)
         big = big.persist()
     bg_counts = big.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg"))
     prefix = F.substring_index(F.col("bg"), " ", 1)
@@ -298,7 +301,7 @@ def bigram_logprob_scores(
     )
     # integer-division mean — see unigram_logprob_scores for the tie
     # rationale
-    return (
+    out = (
         big.join(model, "bg")
         .groupBy(id_col)
         .agg(
@@ -313,6 +316,8 @@ def bigram_logprob_scores(
             ).alias("mean_neg_logprob"),
         )
     )
+    out._stage_caches = [big] if cache else []
+    return out
 
 
 def dsir_importance_weights(
@@ -1424,7 +1429,15 @@ def _kn5_score_table(g5: DataFrame) -> DataFrame:
     """The per-gram KN-5 score table ``(pg_k, lpu)`` from the persisted
     distinct-5-gram model table: five suffix-table groupBys of ``g5``
     (disjoint key names per derived frame — self-lineage join rule) star-
-    joined back, plus the licensed 1-row ``nal`` scalar broadcast."""
+    joined back, plus the licensed 1-row ``nal`` scalar broadcast.
+
+    Precondition: ``a``..``e`` are never NULL. The ``COUNT(1)`` identities
+    below equal ``count_distinct`` only over non-NULL tokens
+    (``count_distinct`` skips NULLs, ``COUNT(1)`` counts them). Both
+    n-gram builders (:func:`kn_5gram_doc_nll`, :func:`_kn5_model_table`)
+    meet it by construction: every part is a ``substring_index`` of a
+    non-NULL 5-gram of whitespace tokens. It is not checked at runtime,
+    which would add a job to every KN query."""
     # Optimization round 16 (guide §2.4 / CLAUDE.md replay rule): the
     # suffix levels feed 3-5 consumers each (the next level(s) down AND
     # the star join), and with nothing persisted between them each deeper
@@ -1618,7 +1631,9 @@ def _kn5_group_counts(
 def _kn5_model_table(gpg: DataFrame) -> DataFrame:
     """The persisted distinct-5-gram model table derived from the
     per-(g, pg) count frame by a second-level aggregation (two-level agg:
-    the corpus is scanned once, by :func:`_kn5_group_counts`)."""
+    the corpus is scanned once, by :func:`_kn5_group_counts`). Its
+    ``a``..``e`` parts are non-NULL, the precondition of
+    :func:`_kn5_score_table`'s ``COUNT(1)`` identities."""
 
     def part(i: int) -> F.Column:
         if i == 1:

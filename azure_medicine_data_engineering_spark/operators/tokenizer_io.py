@@ -42,6 +42,7 @@ from azure_medicine_data_engineering_spark.operators.byte_bpe import (
     DELIM,
     byte_symbol_string,
 )
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
 
 GPT2_MERGES_FILE = "merges.txt"
 GPT2_VOCAB_FILE = "vocab.json"
@@ -151,7 +152,8 @@ def _gpt2_word_piece_stats(
             F.lit(f"{DELIM}{a}{dd}{b}{DELIM}"),
             F.lit(f"{DELIM}{a}{b}{DELIM}"),
         )
-    vocab_df = spark.createDataFrame(
+    vocab_df = from_rows(
+        spark,
         [(t, i) for t, i in vocab.items()],
         "piece_tok string, piece_id long",
     )

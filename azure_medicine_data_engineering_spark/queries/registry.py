@@ -84,22 +84,6 @@ def cents_avg(col: str, digits: int = 4):
     )
 
 
-def cents_sum_sql(col: str, digits: int = 4) -> str:
-    """DuckDB twin of :func:`cents_sum` (interpolate into oracle SQL)."""
-    return (
-        f"ROUND(CAST(SUM(CAST(ROUND({col} * 100) AS BIGINT)) AS DOUBLE) / 100,"
-        f" {digits})"
-    )
-
-
-def cents_avg_sql(col: str, digits: int = 4) -> str:
-    """DuckDB twin of :func:`cents_avg` (interpolate into oracle SQL)."""
-    return (
-        f"ROUND(CAST(SUM(CAST(ROUND({col} * 100) AS BIGINT)) AS DOUBLE) / 100"
-        f" / COUNT({col}), {digits})"
-    )
-
-
 def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table with a canonical microsecond TIMESTAMP ``ts``.
 

@@ -19,6 +19,7 @@ from azure_medicine_data_engineering_spark.queries.registry import (
     register,
     table as _t,
 )
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -399,7 +400,8 @@ def q_ml_decision_tree_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = evaluate(model, test, features, "label")
     n_pred = model.transform(test).count()
     acc, auc = result.metrics["accuracy"], result.metrics["auc"]
-    return spark.createDataFrame(
+    return from_rows(
+        spark,
         [
             (
                 train.count(),
@@ -489,7 +491,8 @@ def q_ml_quality_classifier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train.unpersist()
     test.unpersist()
-    return spark.createDataFrame(
+    return from_rows(
+        spark,
         [
             (
                 counts["n_train"],

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
 from azure_medicine_data_engineering_spark.sources.writers import save_table
 
 META_SCHEMA = StructType(
@@ -45,7 +46,7 @@ def create_table_with_meta(
     spark = df.sparkSession
     save_table(df, name, partition_by=partition_by)
     meta_row = (
-        spark.createDataFrame([(name, description)], "tableName string, tableDescription string")
+        from_rows(spark, [(name, description)], "tableName string, tableDescription string")
         .withColumn("time_stamp", F.current_timestamp())
     )
     if spark.catalog.tableExists(catalog_table):

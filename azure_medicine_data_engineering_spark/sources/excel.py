@@ -8,8 +8,8 @@ shared-strings table, and worksheet cells; rows land in a Spark DataFrame.
 
 Scale note: Excel is inherently a small-file, driver-side format (config
 workbooks, hand-maintained code lists — the reference's use case). The
-driver parses once and parallelizes the rows; large-data ingress belongs in
-parquet/CSV readers (``sources/readers.py``).
+driver parses once and hands the rows to the JVM as one Arrow table;
+large-data ingress belongs in parquet/CSV readers (``sources/readers.py``).
 """
 
 from __future__ import annotations
@@ -19,6 +19,8 @@ import zipfile
 from xml.etree import ElementTree
 
 from pyspark.sql import DataFrame, SparkSession
+
+from azure_medicine_data_engineering_spark.sources.readers import from_rows
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -164,4 +166,4 @@ def excel_to_df(
     schema = StructType(
         [StructField(n, t, nullable=True) for n, t in zip(names, types)]
     )
-    return spark.createDataFrame(harmonized, schema)
+    return from_rows(spark, harmonized, schema)

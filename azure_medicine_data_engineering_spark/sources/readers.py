@@ -53,32 +53,37 @@ def read_table(spark: SparkSession, name: str) -> DataFrame:
 def from_rows(
     spark: SparkSession,
     rows: Iterable,
-    schema: StructType | list[str] | str,
+    schema: StructType | str,
 ) -> DataFrame:
-    """Local collection → DataFrame (S7). Only for small metadata/config
-    frames (division tables, report rows) — never for data-plane input."""
-    return spark.createDataFrame(list(rows), schema=schema)
+    """Driver-side rows → DataFrame (S7): the library's one path for small
+    metadata/config frames (division tables, report rows, catalog
+    registrations, merge/vocab tables) — never for data-plane input.
+
+    ``rows`` are positional tuples matching ``schema`` (a ``StructType`` or
+    a DDL string). They become one ``pyarrow.Table`` typed by the schema,
+    and ``spark.createDataFrame(table, schema)`` turns that into a local
+    relation inside the JVM. A Python list would instead be parallelized
+    into an RDD whose rows Python workers unpickle, a job's worth of
+    overhead on every call. A value that does not fit its column type
+    raises here, on the driver."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def register_view(df: DataFrame, name: str) -> DataFrame:
     """Make a frame SQL-addressable (S8); returns the frame for chaining."""
     df.createOrReplaceTempView(name)
     return df
-
-
-def load_star_schema(spark: SparkSession, sf_dir: str, tables: Iterable[str] | None = None) -> dict[str, DataFrame]:
-    """Load the driver's test tables from a scale-factor directory and register
-    each as a temp view. Returns {name: DataFrame}."""
-    names = list(tables) if tables is not None else [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
-        register_view(df, name)
-        out[name] = df
-    return out
 
 
 def read_jsonl(

@@ -12,20 +12,26 @@ Parity notes:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 
 
 def _delta_available(df: DataFrame) -> bool:
-    # Delta/Avro jar re-probe ritual: still absent in this runtime
-    # (re-probed 2026-08-16, rounds 12-15 — delta Py4JJavaError, avro
-    # AnalysisException, no delta jars on any classpath glob, no delta-spark
-    # pip pkg); the env-gated tests flip on the round the jars appear.
-    # Class.forName, not attribute probing: py4j returns a lazy JavaPackage
-    # for any dotted path, so `_jvm.io.delta...` never raises on its own.
+    """Whether the session's JVM can load Delta. Probed once per JVM (one
+    py4j gateway each): the classpath is fixed at launch, and a failed
+    probe costs ~25 ms, once or twice per publish."""
+    return _jvm_has_delta(df.sparkSession.sparkContext._gateway)
+
+
+@functools.cache
+def _jvm_has_delta(gateway) -> bool:
+    # Without Delta jars on the classpath this is False and the Delta
+    # tests stay gated off. Class.forName, not attribute probing: py4j
+    # returns a lazy JavaPackage for any dotted path, so
+    # `_jvm.io.delta...` never raises on its own.
     try:
-        df.sparkSession._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "io.delta.tables.DeltaTable"
-        )
+        gateway.jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
         return True
     except Exception:
         return False

@@ -99,3 +99,17 @@ def test_rescore_matches_in_memory_pruned_model(spark, docs, exported):
     for g in want:
         for col in ("n_docs", "n_5grams", "nll_pruned"):
             assert got[g][col] == want[g][col], (g, col)
+
+
+def test_write_section_rejects_null_stat(spark, tmp_path):
+    """A NULL stat fails the section write instead of landing as "nan"
+    (or "1.0" once Arrow widens the column to float64)."""
+    from azure_medicine_data_engineering_spark.operators.arpa import _write_section
+
+    level = spark.createDataFrame(
+        [("a", 1, 2, 3), ("b", None, 2, 3)],
+        "w1 string, n1ep long, w2p long, l2p long",
+    )
+    with pytest.raises(Exception, match="non-finite"):
+        _write_section(level, 1, str(tmp_path), 1).collect()
+    assert not glob.glob(os.path.join(str(tmp_path), "1gram-*.txt"))

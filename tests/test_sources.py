@@ -1,14 +1,20 @@
 """Source/sink tests (SURVEY §2.1): CSV roundtrip with inference, pinned
-schemas, single-file export, managed tables + metadata catalog."""
+schemas, single-file export, managed tables + metadata catalog, the
+driver-rows path (``from_rows``) and the session's one Python daemon."""
 
+import ast
 import glob
 import os
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
+from azure_medicine_data_engineering_spark.operators.divisions import DIVISION_SCHEMA
+from azure_medicine_data_engineering_spark.operators.quality import REPORT_SCHEMA
 from azure_medicine_data_engineering_spark.sources import (
     create_table_with_meta,
+    from_rows,
     read_csv,
     read_meta,
     save_table,
@@ -323,3 +329,106 @@ def test_warc_folded_header_lines_join():
     headers, content = records[0]
     assert headers["warc-target-uri"] == "http://example.com/a very/long/path"
     assert content == b"body"
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([("labs", ["hb", "crp"]), ("none", None), ("empty", [])], DIVISION_SCHEMA),
+        ([], REPORT_SCHEMA),
+        ([("t_cat", "demo table")], "tableName string, tableDescription string"),
+        (
+            [(1, "a", "b", 7), (2, "ab", None, 3)],
+            "merge_idx int, left_sym string, right_sym string, pair_count long",
+        ),
+    ],
+    ids=["divisions", "empty_report", "catalog_meta", "merge_table"],
+)
+def test_from_rows_matches_create_dataframe(spark, rows, schema):
+    got = from_rows(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    # a driver-local relation: no RDD of pickled rows behind it
+    assert "ExistingRDD" not in got._jdf.queryExecution().executedPlan().toString()
+
+
+def test_from_rows_rejects_mistyped_value(spark):
+    with pytest.raises(Exception, match="(?i)expected bytes"):
+        from_rows(spark, [(1,)], "name string")
+
+
+def _children(pid: int) -> list[tuple[int, str]]:
+    """(pid, cmdline) of every live process whose parent is ``pid``."""
+    out = []
+    for d in pathlib.Path("/proc").iterdir():
+        if not d.name.isdigit():
+            continue
+        try:
+            stat = (d / "stat").read_text()
+            cmd = (d / "cmdline").read_bytes().replace(b"\0", b" ").decode()
+        except OSError:
+            continue
+        if int(stat.rsplit(")", 1)[1].split()[1]) == pid:
+            out.append((int(d.name), cmd))
+    return out
+
+
+def test_one_python_daemon_per_session(spark):
+    """SQL Python runners and RDD-path jobs share one ``pyspark.worker``
+    daemon: the session profile gives both the same worker environment.
+    (Python data-source planning runs other worker modules, each under
+    its own daemon.)"""
+    spark.range(4).withColumn("k", F.col("id") % 2).groupBy("k").applyInPandas(
+        lambda pdf: pdf[["k"]], "k long"
+    ).collect()
+    spark.createDataFrame([(1,), (2,)], "x long").collect()  # RDD path
+    jvm = int(spark._jvm.java.lang.ProcessHandle.current().pid())
+    daemons = [
+        p for p, cmd in _children(jvm) if cmd.split()[-2:] == ["pyspark.daemon", "pyspark.worker"]
+    ]
+    assert len(daemons) == 1, _children(jvm)
+
+
+def test_delta_probe_runs_once_per_jvm(spark):
+    from azure_medicine_data_engineering_spark.sources import writers
+
+    writers._jvm_has_delta.cache_clear()
+    first = writers._delta_available(spark.range(1))
+    assert writers._delta_available(spark.range(2)) is first
+    info = writers._jvm_has_delta.cache_info()
+    assert (info.misses, info.hits) == (1, 1)
+
+
+#: Library call sites allowed to call ``createDataFrame`` directly, as
+#: ``(module path, enclosing function): reason``. Every other driver-side
+#: frame goes through ``from_rows``.
+_CREATE_DATAFRAME_EXEMPT: dict[tuple[str, str], str] = {
+    ("sources/readers.py", "from_rows"): "the one Arrow-table path itself",
+}
+
+
+def _create_dataframe_calls(node, fn="<module>"):
+    """(line, innermost enclosing function) of each ``.createDataFrame(`` call."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        fn = node.name
+    if (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ):
+        yield node.lineno, fn
+    for child in ast.iter_child_nodes(node):
+        yield from _create_dataframe_calls(child, fn)
+
+
+def test_library_builds_driver_frames_only_through_from_rows():
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "azure_medicine_data_engineering_spark"
+    offenders = [
+        f"{rel}:{line} in {fn}"
+        for path in sorted(pkg.rglob("*.py"))
+        for rel in [path.relative_to(pkg).as_posix()]
+        for line, fn in _create_dataframe_calls(ast.parse(path.read_text()))
+        if (rel, fn) not in _CREATE_DATAFRAME_EXEMPT
+    ]
+    assert not offenders, offenders
